@@ -23,10 +23,11 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import aggregates, cleaning, dimensions, fact, quality
+from ..session import observed
 from ..sources import Catalog
 
 
@@ -2824,17 +2825,28 @@ class CatalogWarehouse(Warehouse):
         return self.spark.catalog.tableExists(name)
 
 
+def write_counted(
+    wh: Warehouse, df: DataFrame, name: str, partition_by: list[str] | None = None
+) -> int:
+    """``wh.write(df, name, partition_by)``, returning the rows written.
+    The count is an Observation on the written frame, so it is taken
+    during the write itself instead of by a second scan of the table."""
+    obs = Observation()
+    wh.write(df.observe(obs, F.count(F.lit(1)).alias("rows")), name, partition_by)
+    return observed(obs)["rows"]
+
+
 def stage_ingest(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> int:
     """IngestionJob parity: scan → clean → enrich → partitioned write."""
     cleaned = cleaning.clean_lineitem(cat.lineitem).withColumn(
         "ship_year", F.year("ship_date")
     )
-    wh.write(
+    return write_counted(
+        wh,
         cleaned,
         "trips_raw",
         ["ship_date"] if partition_daily else ["ship_year"],
     )
-    return wh.read("trips_raw").count()
 
 
 def stage_dimensions(wh: Warehouse, cat: Catalog) -> tuple[int, int]:
@@ -2844,9 +2856,10 @@ def stage_dimensions(wh: Warehouse, cat: Catalog) -> tuple[int, int]:
     raw = wh.read("trips_raw")
     entity = dimensions.build_entity_dim(raw, "l_partkey", "l_suppkey")
     date_dim = dimensions.build_date_dim(raw, "ship_date")
-    wh.write(entity, "entity_dim")
-    wh.write(date_dim, "date_dim")
-    return wh.read("entity_dim").count(), wh.read("date_dim").count()
+    return (
+        write_counted(wh, entity, "entity_dim"),
+        write_counted(wh, date_dim, "date_dim"),
+    )
 
 
 def stage_fact(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> int:
@@ -2859,32 +2872,34 @@ def stage_fact(wh: Warehouse, cat: Catalog, partition_daily: bool = False) -> in
     f = fact.build_fact(
         cat.lineitem, cat.orders, cat.customer, cat.supplier, cat.nation, date_dim
     )
-    wh.write(
+    return write_counted(
+        wh,
         f,
         "star_fact",
         ["ship_date"] if partition_daily else ["year"],
     )
-    return wh.read("star_fact").count()
 
 
 def stage_aggregates(wh: Warehouse) -> dict[str, int]:
     """AggregationJob parity: one fact scan fanned into three summaries.
     The fact is cached across the three aggregations — the reference
     re-scans it per summary and even re-aggregates for its log counts
-    (SURVEY.md §4.3.1); counts here come from the written tables."""
+    (SURVEY.md §4.3.1); counts here are observed during the writes."""
     if not wh.exists("star_fact"):
         raise RuntimeError("pipeline ordering violation: missing table star_fact")
     f = wh.read("star_fact").cache()
     try:
-        wh.write(aggregates.agg_pair_daily(f), "pair_daily", ["supp_nation"])
-        wh.write(aggregates.agg_time(f), "time_analysis", ["year"])
-        wh.write(aggregates.top_pairs(f, 50), "top_pairs")
+        return {
+            "pair_daily": write_counted(
+                wh, aggregates.agg_pair_daily(f), "pair_daily", ["supp_nation"]
+            ),
+            "time_analysis": write_counted(
+                wh, aggregates.agg_time(f), "time_analysis", ["year"]
+            ),
+            "top_pairs": write_counted(wh, aggregates.top_pairs(f, 50), "top_pairs"),
+        }
     finally:
         f.unpersist()
-    return {
-        name: wh.read(name).count()
-        for name in ("pair_daily", "time_analysis", "top_pairs")
-    }
 
 
 def stage_quality(wh: Warehouse) -> dict:
@@ -2900,9 +2915,7 @@ def stage_curate(wh: Warehouse, cat: Catalog) -> int:
     written as its own warehouse table for downstream training jobs."""
     from ..operators import curation
 
-    curated = curation.curate_documents(cat.documents)
-    wh.write(curated, "curated_docs")
-    return wh.read("curated_docs").count()
+    return write_counted(wh, curation.curate_documents(cat.documents), "curated_docs")
 
 
 def run_pipeline(

@@ -25,7 +25,46 @@ from complex_data_pipeline_with_joins_and_multi_table_operations_spark.streaming
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _assert_stage_counts(wh, result):
+    """Each count run_pipeline returns is observed during the write; it
+    must equal a fresh read of the table it counts."""
+    counts = {
+        "trips_raw": result["ingest_rows"],
+        "entity_dim": result["entity_dim_rows"],
+        "date_dim": result["date_dim_rows"],
+        "star_fact": result["fact_rows"],
+        **result["aggregates"],
+        "curated_docs": result["curated_rows"],
+    }
+    assert counts == {name: wh.read(name).count() for name in counts}
+
+
+def _assert_zstd_file_roundtrips(spark, path):
+    """A written parquet file is zstd in every column chunk, and DuckDB
+    (the oracles' engine) reads back exactly the rows Spark reads."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    assert meta.num_rows > 0
+    assert {
+        meta.row_group(g).column(c).compression
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    } == {"ZSTD"}
+    spark_rows = sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
+    duck_rows = sorted(
+        duckdb.sql(
+            f"SELECT * FROM read_parquet('{path}', hive_partitioning = false)"
+        ).fetchall(),
+        key=repr,
+    )
+    assert spark_rows == duck_rows
+
+
 def test_full_pipeline_end_to_end(spark, tmp_path):
+    import glob
+
     result = run_pipeline(spark, SF_DIR, str(tmp_path / "wh"))
     assert result["ingest_rows"] == 6000
     assert result["fact_rows"] > 0
@@ -35,6 +74,29 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     assert result["quality"]["missing_a"] == 0
     # curation stage writes a non-empty curated_docs table within budget
     assert 0 < result["curated_rows"] <= 500
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    _assert_stage_counts(wh, result)
+    (top_pairs_file,) = glob.glob(f"{wh.path('top_pairs')}/*.parquet")
+    _assert_zstd_file_roundtrips(spark, top_pairs_file)
+
+
+def test_observed_raises_when_the_frame_never_runs(spark, monkeypatch):
+    import time
+
+    import pytest
+    from pyspark.sql import Observation
+
+    from complex_data_pipeline_with_joins_and_multi_table_operations_spark import (
+        session,
+    )
+
+    monkeypatch.setattr(session, "OBSERVATION_TIMEOUT_S", 0.2)
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("rows"))  # no action
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="no metrics after 0.2s"):
+        session.observed(obs)
+    assert time.monotonic() - t0 < 5
 
 
 def test_pipeline_stage_guard(spark, tmp_path):

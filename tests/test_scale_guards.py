@@ -246,9 +246,13 @@ def test_catalog_warehouse_stages_show_tables_describe(spark, cat, tmp_path):
     reference's verification surface (SHOW TABLES / DESCRIBE)."""
     wh = CatalogWarehouse(spark, str(tmp_path))
     try:
-        assert stage_ingest(wh, cat) > 0
-        stage_dimensions(wh, cat)
-        assert stage_fact(wh, cat) > 0
+        # counts are observed during each write; they must match the tables
+        assert stage_ingest(wh, cat) == wh.read("trips_raw").count() > 0
+        assert stage_dimensions(wh, cat) == (
+            wh.read("entity_dim").count(),
+            wh.read("date_dim").count(),
+        )
+        assert stage_fact(wh, cat) == wh.read("star_fact").count() > 0
         shown = {r.tableName for r in spark.sql("SHOW TABLES").collect()}
         assert {"trips_raw", "entity_dim", "date_dim", "star_fact"} <= shown
         described = {r.col_name for r in spark.sql("DESCRIBE trips_raw").collect()}

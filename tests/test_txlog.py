@@ -194,6 +194,11 @@ def test_vacuum_reclaims_only_unreferenced(spark, tmp_path):
 
 
 def test_txlog_warehouse_runs_pipeline_and_time_travels(spark, tmp_path):
+    from tests.test_pipeline import (
+        _assert_stage_counts,
+        _assert_zstd_file_roundtrips,
+    )
+
     res = run_pipeline(
         spark, SF_DIR, str(tmp_path / "wh"), warehouse_cls=TxLogWarehouse
     )
@@ -201,6 +206,14 @@ def test_txlog_warehouse_runs_pipeline_and_time_travels(spark, tmp_path):
     assert res["quality"]["passed"] is True
     wh = TxLogWarehouse(spark, str(tmp_path / "wh"))
     assert "star_fact" in wh.tables()
+    _assert_stage_counts(wh, res)
+    top_pairs = TableLog(spark, wh.path("top_pairs"))
+    data_file = next(
+        os.path.join(top_pairs.data_dir, rel)
+        for rel, meta in top_pairs.snapshot().files.items()
+        if meta["rows"]
+    )
+    _assert_zstd_file_roundtrips(spark, data_file)
     # stage rerun = new snapshot; VERSION AS OF reads the old one through
     # the same SQL surface the reference verifies with (README.md:143-154)
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark.plans.pipeline import (

@@ -20,21 +20,19 @@ def main() -> int:
     if argv and argv[0] == "-n":
         trials = int(argv[1])
         argv = argv[2:]
-    if not argv:
+    # a lone existing directory is a data dir with no queries, not a query
+    if not argv or (len(argv) == 1 and os.path.isdir(argv[0])):
         print(
             "usage: bench_subset.py [-n TRIALS] [sf_dir] query [query ...]",
             file=sys.stderr,
         )
         return 2
-    # argv[0] is a data dir only when it exists AND further args follow
-    # (a lone query name matching a directory stays a query name)
-    takes_dir = os.path.isdir(argv[0]) and len(argv) > 1
+    takes_dir = os.path.isdir(argv[0])
     sf_dir = argv[0] if takes_dir else "/root/testdata/sf0.1"
     names = argv[1:] if takes_dir else argv
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark import (
         get_spark,
     )

@@ -1,6 +1,6 @@
 """Dump `.explain("formatted")` for registry queries into plans/r13/.
 
-Usage: python tools/plan_dump_r12.py <suffix> [sf_dir] [query ...]
+Usage: python tools/plan_dump_r13.py <suffix> [sf_dir] [query ...]
 
 suffix is `before` or `after`; files land at plans/r13/<query>_<suffix>.txt.
 With no query list, dumps every registry query. explain() only PLANS the
@@ -15,6 +15,9 @@ import sys
 
 
 def main() -> int:
+    if len(sys.argv) < 2:
+        print("usage: plan_dump_r13.py <suffix> [sf_dir] [query ...]", file=sys.stderr)
+        return 2
     suffix = sys.argv[1]
     argv = sys.argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"

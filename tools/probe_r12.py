@@ -17,16 +17,16 @@ import time
 
 def main() -> int:
     argv = sys.argv[1:]
-    if not argv:
+    # a lone existing directory is a data dir with no queries, not a query
+    if not argv or (len(argv) == 1 and os.path.isdir(argv[0])):
         print("usage: probe_r12.py [sf_dir] query [query ...]", file=sys.stderr)
         return 2
-    takes_dir = os.path.isdir(argv[0]) and len(argv) > 1
+    takes_dir = os.path.isdir(argv[0])
     sf_dir = argv[0] if takes_dir else "/root/testdata/sf0.1"
     names = argv[1:] if takes_dir else argv
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
 
     from complex_data_pipeline_with_joins_and_multi_table_operations_spark import (
         get_spark,
